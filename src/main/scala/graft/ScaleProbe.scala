@@ -67,16 +67,13 @@ object ScaleProbe {
       graft.operators.AsofJoin.leftAsofNative(p, c, Seq("user_id"),
         "ts", "ts", Seq("value"), "_c").count()
     }
-    def dedupW(df: DataFrame) = graft.operators.Dedup
-      .replacingDedup(df, Seq("user_id", "event_type"),
-        Seq(col("ts"), col("event_id"))).count()
     def dedupA(df: DataFrame) = graft.operators.Dedup
       .replacingDedupAgg(df, Seq("user_id", "event_type"),
         Seq("ts", "event_id")).count()
 
     val ops: Seq[(String, DataFrame => Any)] = Seq(
       "ohlc_1m" -> ohlc, "sessionize" -> sess, "group_topk" -> topk,
-      "asof_join" -> asof, "dedup_window" -> dedupW, "dedup_agg" -> dedupA)
+      "asof_join" -> asof, "dedup_agg" -> dedupA)
 
     // text-family probe on SYNTHETIC random-vocab docs (150 words from a
     // 50k vocab, seeded by doc_id): replicating or permuting the real
@@ -761,8 +758,9 @@ object ScaleProbe {
     //     break one hot key across time buckets; a FIXED day-wide bucket
     //     re-serializes as soon as per-day density crosses the ~1M-row
     //     crossover (at 10× density a day bucket holds 10M rows — the
-    //     skew is back, just one level down). bucketWidthFor targets
-    //     ≈ crossover rows per (key, bucket) from the measured density,
+    //     skew is back, just one level down). bucketWidthFor with no
+    //     density windows targets ≈ crossover rows per (key, bucket) from
+    //     the average density over the span,
     //     so rows-per-bucket stays constant as density scales. What the
     //     numbers must establish: the fixed-width wall grows ~linearly
     //     in density (serialized single bucket) while the auto-width
@@ -793,7 +791,7 @@ object ScaleProbe {
       println(f"${"asof_width"}%-14s ${"rows"}%9s ${"width_s"}%8s ${"buckets"}%8s ${"wall_s"}%8s")
       Seq(2000000L, 8000000L, 20000000L).foreach { n =>
         val total = n + n / 2
-        val auto = graft.operators.AsofJoin.bucketWidthFor(total, day)
+        val auto = graft.operators.AsofJoin.bucketWidthFor(total, day, Nil)
         Seq("fixed_day" -> day, "auto" -> auto).foreach { case (tag, w) =>
           val wall = run(n, w)
           println(f"$tag%-14s $n%9d $w%8d ${day / w}%8d $wall%8.2f")
@@ -804,8 +802,8 @@ object ScaleProbe {
       val r = hotSide(1000000L, payload = true).select(col("k"), col("t"), col("v"))
       val d = graft.operators.AsofJoin.chooseAsofDispatch(
         l, r, Seq("k"), "t", "t")
-      println(s"dispatch_e2e   form=${d.form} width=${d.bucketSeconds}s " +
-        s"(expected bucketed, ~${graft.operators.AsofJoin.bucketWidthFor(3000000L, day)}s)")
+      println(s"dispatch_e2e   $d " +
+        s"(expected Bucketed, ~${graft.operators.AsofJoin.bucketWidthFor(3000000L, day, Nil)}s)")
     }
     // (r15) BURST resistance of the auto as-of width: fixed rows on one
     //     hot key over a FIXED month span, concentration swept — conc=c
@@ -842,9 +840,10 @@ object ScaleProbe {
         // aggregate the joined payload (count alone would let pruning
         // delete the window fill being measured)
         if (mode == "avg") {
-          // the r14 sizing: average density over the span, burst-blind
+          // the r14 sizing: average density over the span, no density
+          // windows — burst-blind
           val width = graft.operators.AsofJoin
-            .bucketWidthFor(n + n / 2 + 2000L, monthSec)
+            .bucketWidthFor(n + n / 2 + 2000L, monthSec, Nil)
           time(graft.operators.AsofJoin.leftAsofBucketed(
             l, r, Seq("k"), "t", "t", Seq("v"), "_c", bucketSeconds = width)
             .agg(count(col("v_c")), sum(col("v_c"))).head())
@@ -868,7 +867,7 @@ object ScaleProbe {
         val r = burstSide(4000000L, c, payload = true)
         val d = graft.operators.AsofJoin
           .chooseAsofDispatch(l, r, Seq("k"), "t", "t")
-        println(s"burst_dispatch conc=$c form=${d.form} width=${d.bucketSeconds}s")
+        println(s"burst_dispatch conc=$c $d")
       }
       // (r16) MINUTE-scale burst: every dense row inside ONE 60 s window
       // of the month. The HOURLY peak sees the burst at hour resolution —
@@ -894,11 +893,11 @@ object ScaleProbe {
         val l = microSide(n, payload = false)
         val r = microSide(n / 2, payload = true)
         if (mode == "hourpeak") {
-          // the r15 sizing: hourly peak only — the whole minute burst
+          // the r15 sizing: the hour window only — the whole minute burst
           // lands in one hour, so this width is ~3600·target/rows
           val rows = n + n / 2 + 2000L
           val width = graft.operators.AsofJoin
-            .bucketWidthFor(rows, monthSec, rows, 3600L, 1000000L)
+            .bucketWidthFor(rows, monthSec, Seq(rows -> 3600L))
           time(graft.operators.AsofJoin.leftAsofBucketed(
             l, r, Seq("k"), "t", "t", Seq("v"), "_c", bucketSeconds = width)
             .agg(count(col("v_c")), sum(col("v_c"))).head())
@@ -919,7 +918,7 @@ object ScaleProbe {
         val r = microSide(4000000L, payload = true)
         val d = graft.operators.AsofJoin
           .chooseAsofDispatch(l, r, Seq("k"), "t", "t")
-        println(s"uburst_dispatch form=${d.form} width=${d.bucketSeconds}s")
+        println(s"uburst_dispatch $d")
       }
     }
     // (f) big-big interval-overlap join on ONE hot key (r14): Catalyst

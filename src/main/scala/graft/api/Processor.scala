@@ -297,42 +297,11 @@ final class Processor(spark: SparkSession, warehouse: String) {
     val p = validatePair(pair)
     val minutes = validateTimeframe(timeframe)
     validateRange(start, end)
-    // zone-map pruned read of the gold table: regenerate refreshes each
-    // rewritten month's _manifest (keyed on timestamp), so a date-ranged
-    // bar query plans only the files whose range can intersect — the same
-    // PrunedScan path as readTicksPruned; any unusable sidecar/listing
-    // falls back to the plain partitioned read below
-    import graft.storage.PrunedScan
-    val prunedFiles = PrunedScan.monthPartitionedFiles(
-      spark.sessionState.newHadoopConf(),
-      new org.apache.hadoop.fs.Path(s"$warehouse/ohlc_1m"), "timestamp",
-      Some(p), start.map(PrunedScan.monthOfLo(spark, _)),
-      end.map(PrunedScan.monthOfHi(spark, _)),
-      PrunedScan.sessionInstant(spark, start.getOrElse("1900-01-01")),
-      PrunedScan.sessionInstant(spark,
-        end.map(_ + " 23:59:59").getOrElse("9999-01-01")))
-    var df = prunedFiles match {
-      case Some(paths) if paths.nonEmpty =>
-        spark.read.option("basePath", s"$warehouse/ohlc_1m")
-          .parquet(paths.map(_.toString): _*)
-          .filter(col("instrument") === p)
-      case Some(Nil) => // provably empty: keep the exact plan, zero rows
-        spark.read.parquet(s"$warehouse/ohlc_1m")
-          .filter(col("instrument") === p).filter(lit(false))
-      case _ =>
-        spark.read.parquet(s"$warehouse/ohlc_1m")
-          .filter(col("instrument") === p)
-    }
-    start.foreach(s => df = df.filter(col("timestamp") >= lit(s).cast("timestamp") &&
-      col("yyyymm") >= date_format(lit(s).cast("timestamp"), "yyyyMM")))
-    end.foreach(e => df = df.filter(
-      col("timestamp") <= lit(e + " 23:59:59").cast("timestamp") &&
-        col("yyyymm") <= date_format(lit(e).cast("timestamp"), "yyyyMM")))
-    // partition columns come back at the end of the schema; restore the
-    // reference's 27-column order (clickhouse_manager.py:196-224)
-    val out =
-      if (minutes == 1) df.select(OhlcGenerator.Columns.map(col): _*)
-      else resampleOhlc(df, minutes)
+    // zone-map pruned read of the gold table (see ohlcFrom): regenerate
+    // refreshes each rewritten month's _manifest, so a date-ranged bar
+    // query plans only the files whose range can intersect
+    val df = ohlcFrom(p, start, end)(None)
+    val out = if (minutes == 1) df else resampleOhlc(df, minutes)
     val ordered = out.orderBy("timestamp")
     limit.map(ordered.limit).getOrElse(ordered)
   }
@@ -633,14 +602,22 @@ final class Processor(spark: SparkSession, warehouse: String) {
       end.fold(s1)(e =>
         s1.filter(col("timestamp") <= lit(e + " 23:59:59.999999").cast("timestamp")))
     }
-    def plain() = exact(spark.read.parquet(root)
-      .filter(col("instrument") === p)
-      .select(OhlcGenerator.Columns.map(col): _*))
+    val loMonth = lo.map(PrunedScan.monthOfLo(spark, _))
+    val hiMonth = hi.map(PrunedScan.monthOfHi(spark, _))
+    // partition columns come back at the end of the schema; the select
+    // restores the reference's 27-column order (clickhouse_manager.py:
+    // 196-224). The fallback read still cuts months by partition name,
+    // so a layout the listing cannot prove keeps its month pruning.
+    def plain() = {
+      val inst = spark.read.parquet(root).filter(col("instrument") === p)
+      val cut = loMonth.fold(inst)(m => inst.filter(col("yyyymm") >= m))
+      exact(hiMonth.fold(cut)(m => cut.filter(col("yyyymm") <= m))
+        .select(OhlcGenerator.Columns.map(col): _*))
+    }
     if (lo.isEmpty && hi.isEmpty) plain()
     else PrunedScan.monthPartitionedFiles(
       spark.sessionState.newHadoopConf(), new Path(root), "timestamp",
-      Some(p), lo.map(PrunedScan.monthOfLo(spark, _)),
-      hi.map(PrunedScan.monthOfHi(spark, _)),
+      Some(p), loMonth, hiMonth,
       PrunedScan.sessionInstant(spark, lo.getOrElse("1900-01-01")),
       PrunedScan.sessionInstant(spark, hi.getOrElse("9999-01-01"))) match {
       case None => plain()

@@ -133,8 +133,7 @@ object Ohlc {
   def ticksToOhlc1m(
       rawSpread: DataFrame,
       standard: DataFrame,
-      asofMode: String = "auto",
-      asofBucketSeconds: Long = 86400L
+      asofDispatch: Option[AsofJoin.AsofDispatch] = None
   ): DataFrame = {
     // AUTO-dispatched as-of (r12): the join key is instrument ALONE, so at
     // warehouse scale one major pair's full history is a single hot key —
@@ -143,11 +142,11 @@ object Ohlc {
     // SCALE.md r11/r12). Below the crossover the dispatcher keeps the
     // native single-pass merge; the decision is a capped no-shuffle row
     // scan of the two key columns and, only past 1M combined rows, a
-    // second sampled per-key count agg (small shuffle) — both constant
-    // next to the join they front (Probes.cappedCount/hottestKeyCount).
-    // Callers that already know the shape (OhlcGenerator.regenerate reads
-    // it off parquet footer metadata) pass asofMode explicitly and skip
-    // the probe scan entirely.
+    // second sampled per-key agg (small shuffle) — both constant next to
+    // the join they front (Probes.cappedCount/hottestKeyBurstStats).
+    // Callers that already hold the verdict (OhlcGenerator.regenerate
+    // derives it from parquet footer metadata) pass it and skip the probe
+    // scan entirely.
     val joined = AsofJoin.leftAsofAuto(
       rawSpread,
       standard.select("instrument", "timestamp", "bid", "ask"),
@@ -156,8 +155,7 @@ object Ohlc {
       rightTime = "timestamp",
       rightPayload = Seq("bid", "ask"),
       suffix = "_std",
-      mode = asofMode,
-      bucketSeconds = asofBucketSeconds
+      dispatch = asofDispatch
     )
     val ord = struct(col("timestamp"), col("bid"), col("ask"))
     joined

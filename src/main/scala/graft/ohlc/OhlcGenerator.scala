@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.calendar.TradingCalendar
 import graft.ingest.TickIngest
+import graft.operators.AsofJoin
 
 /** Full 27-column OHLC generation (reference
   * `clickhouse_ohlc_generator.py:65-215` + the session/holiday enrichment
@@ -49,17 +50,16 @@ object OhlcGenerator {
   }
 
   /** Build the full 27-column 1m OHLC frame from the two tick variants.
-    * `asofMode` threads through to the as-of dispatch ([[Ohlc.ticksToOhlc1m]]):
-    * "auto" probes the data; callers that already know the shape (e.g.
-    * [[regenerate]], which reads it off parquet footers) pass the form.
+    * `asofDispatch` threads through to [[Ohlc.ticksToOhlc1m]]: `None`
+    * probes the data; callers that already hold the verdict (e.g.
+    * [[regenerate]], which derives it from parquet footers) pass it.
     */
   def generate(
       rawSpread: DataFrame,
       standard: DataFrame,
-      asofMode: String = "auto",
-      asofBucketSeconds: Long = 86400L
+      asofDispatch: Option[AsofJoin.AsofDispatch] = None
   ): DataFrame =
-    enrichBars(Ohlc.ticksToOhlc1m(rawSpread, standard, asofMode, asofBucketSeconds))
+    enrichBars(Ohlc.ticksToOhlc1m(rawSpread, standard, asofDispatch))
 
   /** The enrichment HALF of [[generate]] — 1m bars (instrument, timestamp,
     * OHLC, spreads, counts) → the full 27-column frame. Split out so the
@@ -95,7 +95,7 @@ object OhlcGenerator {
     * `months` empty = all stored months of the instrument. Throws on an
     * unreadable footer (corrupt/zero-length file): the count is then
     * unknowable from metadata, and [[regenerate]] falls back to a probed
-    * "auto" dispatch rather than guessing.
+    * dispatch rather than guessing.
     */
   /** Monotone count of parquet FOOTER opens paid by the metadata tiers —
     * the cost the `_manifest` sidecar tier exists to avoid. Specs pin that
@@ -161,9 +161,8 @@ object OhlcGenerator {
   /** Seconds spanned by a set of yyyymm month labels: from the first
     * day of the earliest month to the first day of the month AFTER the
     * latest (calendar-exact, so a 31-day month counts its 31 days). Feeds
-    * [[graft.operators.AsofJoin.bucketWidthFor]] with the span the stored
-    * rows actually cover. Empty input → 0 (the width sizer then falls
-    * back to its day default).
+    * [[AsofJoin.dispatchFor]] with the span the stored rows actually cover.
+    * Empty input → 0 (the width sizer then falls back to its day default).
     */
   private[graft] def monthSpanSeconds(months: Seq[String]): Long =
     if (months.isEmpty) 0L
@@ -224,43 +223,25 @@ object OhlcGenerator {
     // total — and parquet footers (or a Manifest sidecar, when present)
     // already hold the exact per-partition totals. A regeneration batch
     // therefore pays zero decision scans (Probes.probeJobs pins this),
-    // where mode="auto" would re-scan the touched months' ticks once per
-    // call. The same footers name WHICH months hold rows, so a "bucketed"
-    // verdict also gets its width sized from the stored density
-    // (AsofJoin.bucketWidthFor) instead of a fixed day. If the metadata
+    // where a probed dispatch would re-scan the touched months' ticks once
+    // per call. The same counts name WHICH months hold rows: the stored
+    // span plus one density window per live month feed the shared
+    // decision (AsofJoin.dispatchFor), so a year of sparse history with
+    // one packed month gets a width sized for that month. If the metadata
     // is unreadable (corrupt footer, listing error) the count is
-    // unknowable without a scan — fall back to mode="auto" and pay the
-    // one probe rather than guessing a form.
-    val (asofForm, asofWidth) = (try {
-      val raw = footerMonthCounts(spark, warehouse, "raw_spread", instrument, months)
-      val std = footerMonthCounts(spark, warehouse, "standard", instrument, stdMonths)
-      Some((raw, std))
-    } catch { case scala.util.control.NonFatal(_) => None }) match {
-      case None => ("auto", 86400L)
-      case Some((raw, std)) =>
-        val total = (raw ++ std).map(_._2).sum
-        if (total > graft.operators.AsofJoin.HotKeyCrossover) {
-          val byMonth = (raw ++ std).groupMapReduce(_._1)(_._2)(_ + _)
-            .filter(_._2 > 0)
-          val live = byMonth.keys.toSeq
-          // average-density width over the whole stored span, corrected
-          // down by the DENSEST month (the footer metadata's burst
-          // resolution — month-granular where the probe path's is hourly,
-          // but free): a year of sparse history with one packed month
-          // must get a width sized for that month, not the year average.
-          val target = graft.operators.AsofJoin.HotKeyCrossover
-          val avg = graft.operators.AsofJoin
-            .bucketWidthFor(total, monthSpanSeconds(live), target)
-          val peak = byMonth.map { case (m, n) =>
-            graft.operators.AsofJoin
-              .bucketWidthFor(n, monthSpanSeconds(Seq(m)), target)
-          }.min
-          ("bucketed", math.min(avg, peak))
-        } else ("plain", 86400L)
+    // unknowable without a scan — fall back to the probe rather than
+    // guessing a form.
+    val asofDispatch = (try {
+      Some(footerMonthCounts(spark, warehouse, "raw_spread", instrument, months) ++
+        footerMonthCounts(spark, warehouse, "standard", instrument, stdMonths))
+    } catch { case scala.util.control.NonFatal(_) => None }).map { counts =>
+      val byMonth = counts.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
+      AsofJoin.dispatchFor(byMonth.values.sum, monthSpanSeconds(byMonth.keys.toSeq),
+        byMonth.toSeq.map { case (m, n) => n -> monthSpanSeconds(Seq(m)) })
     }
     val out = generate(
         monthFiltered("raw_spread", months), monthFiltered("standard", stdMonths),
-        asofMode = asofForm, asofBucketSeconds = asofWidth)
+        asofDispatch)
       .withColumn("yyyymm", date_format(col("timestamp"), "yyyyMM"))
     // the carry-in widening can produce bars for the lookback months too —
     // they are NOT part of this rebuild; only the requested partitions move

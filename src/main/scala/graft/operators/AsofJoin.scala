@@ -233,143 +233,84 @@ object AsofJoin {
     */
   val HotKeyCrossover: Long = 1000000L
 
-  /** Decide which as-of form to run for the given shape: "bucketed" iff the
-    * hottest join key carries more rows than `threshold` (left and right
-    * combined — both sides of the union land in that key's single window
-    * partition and serialize together), else "plain".
+  /** A dispatch verdict: the key-partitioned [[leftAsofNative]] form, or
+    * the (key, time-bucket) [[leftAsofBucketed]] form at a given width.
+    */
+  sealed trait AsofDispatch
+  case object Plain extends AsofDispatch
+  final case class Bucketed(bucketSeconds: Long) extends AsofDispatch
+
+  /** Time-bucket width targeting ≈ `targetRowsPerBucket` rows of the
+    * hottest key per (key, bucket). Each candidate `(rows, seconds)` — the
+    * key's whole span plus any measured density `windows` — demands
+    * `seconds × target / rows`; the width is the smallest demand, clamped
+    * to [1 s, span].
+    *
+    *   - The span candidate splits the key into ≈ rows/target buckets
+    *     regardless of its absolute density. A fixed width (the pre-r14
+    *     86 400 s) re-serializes as soon as per-day density crosses the
+    *     threshold: at 10× the crossover density a day-wide bucket holds
+    *     10M rows and the skew the form exists to break is back.
+    *   - A window candidate corrects that down where the rows bunch: a key
+    *     whose rows sit in one hour of a month span has ~700× its average
+    *     density inside the burst (r15 hour peak), and a one-minute
+    *     open-auction burst hides inside an otherwise-quiet hour (r16
+    *     minute peak). Sizing for the densest window keeps the burst split.
+    *
+    * Windows with rows ≤ 0 or seconds ≤ 0 carry no evidence and are
+    * ignored. A degenerate span candidate (no rows, zero span — e.g. every
+    * row on one timestamp, which no width can split) reads as the day
+    * default and lifts the span clamp. Width is purely physical (all forms
+    * are row-equivalent), so a mis-measured candidate moves cost, never
+    * rows.
+    */
+  def bucketWidthFor(
+      hotKeyRows: Long,
+      spanSeconds: Long,
+      windows: Seq[(Long, Long)],
+      targetRowsPerBucket: Long = HotKeyCrossover): Long = {
+    val degenerate = hotKeyRows <= 0L || spanSeconds <= 0L
+    def demand(rows: Long, seconds: Long): Double =
+      seconds.toDouble * targetRowsPerBucket.toDouble / rows.toDouble
+    val span = if (degenerate) 86400.0 else demand(hotKeyRows, spanSeconds)
+    val w = windows.collect { case (r, sec) if r > 0L && sec > 0L => demand(r, sec) }
+      .foldLeft(span)(math.min).toLong
+    math.max(1L, if (degenerate) w else math.min(spanSeconds, w))
+  }
+
+  /** The as-of form decision from measured shape stats: [[Bucketed]] iff
+    * the hottest join key carries more than `threshold` rows (left and
+    * right combined — both sides of the union land in that key's single
+    * partition and serialize together), sized by [[bucketWidthFor]] with
+    * `threshold` as the per-bucket target; else [[Plain]]. Callers differ
+    * only in where the stats come from: [[chooseAsofDispatch]] samples the
+    * frames (hour and minute peaks), [[graft.ohlc.OhlcGenerator.regenerate]]
+    * reads stored footer counts (one window per live month).
+    */
+  def dispatchFor(
+      hotKeyRows: Long,
+      spanSeconds: Long,
+      windows: Seq[(Long, Long)],
+      threshold: Long = HotKeyCrossover): AsofDispatch =
+    if (hotKeyRows > threshold)
+      Bucketed(bucketWidthFor(hotKeyRows, spanSeconds, windows, threshold))
+    else Plain
+
+  /** Measure the two frames and decide which as-of form to run
+    * ([[dispatchFor]]).
     *
     * Cost of deciding, two tiers: a QUICK REJECT first — if the two sides
     * together hold ≤ threshold rows, no key can possibly exceed it. That
-    * total is counted with a per-partition CAP (each partition stops
-    * iterating past threshold+1 rows) over a zero-column projection: one
-    * narrow job, NO shuffle — deliberately not `LIMIT n + count`, whose
-    * physical plan (LocalLimit → single-partition exchange → GlobalLimit)
-    * would move up to splits×threshold rows through one task at cluster
-    * scale. A capped sum understates the true total only when some
-    * partition hit its cap — and then the total already exceeds the
-    * threshold, so the ≤-threshold test stays exact. Only when the probe
-    * saturates does the per-key tier run — a count agg over a seeded
-    * SAMPLE sized to [[Probes.SampleRowsTarget]] rows per threshold-hot
-    * key (exact below that target), so the decision's shuffle stays
-    * negligible next to the join it fronts at any input size; both forms
-    * are exact, so estimation error near the crossover only flips a
-    * choice between two equal-cost plans. Exposed separately from
-    * [[leftAsofAuto]] so the dispatch rule itself is spec-pinnable.
-    */
-  def chooseAsofForm(
-      left: DataFrame,
-      right: DataFrame,
-      on: Seq[String],
-      threshold: Long = HotKeyCrossover
-  ): String = {
-    val keys = left.select(on.map(col): _*)
-      .unionByName(right.select(on.map(col): _*))
-    if (Probes.cappedCount(keys, threshold) <= threshold) return "plain"
-    // sampled once threshold > Probes.SampleRowsTarget: the decision must
-    // cost less than either plan it picks (see hottestKeyCount's doc)
-    if (Probes.hottestKeyCount(keys, on, threshold) > threshold) "bucketed"
-    else "plain"
-  }
-
-  /** A dispatch verdict with its physical parameters: which form, and —
-    * when bucketed — how wide the (key, time-bucket) buckets are.
-    */
-  final case class AsofDispatch(form: String, bucketSeconds: Long)
-
-  /** Time-bucket width targeting ≈ `targetRowsPerBucket` rows of the
-    * hottest key per (key, bucket): `span × target / rows`, so the hot
-    * key splits into ≈ rows/target buckets regardless of its absolute
-    * density. A fixed width (the pre-r14 86 400 s) re-serializes as soon
-    * as per-day density crosses the threshold — at 10× the crossover
-    * density a day-wide bucket holds 10M rows and the skew the form
-    * exists to break is back inside each bucket.
-    *
-    * Width is clamped to [1 s, span]: sub-second widths add nothing (the
-    * buckets are already at the target), and a width beyond the span is
-    * the plain form with extra steps. Degenerate stats (no rows, zero
-    * span — e.g. every row on one timestamp, which NO width can split)
-    * fall back to the day default.
-    */
-  def bucketWidthFor(
-      hotKeyRows: Long,
-      spanSeconds: Long,
-      targetRowsPerBucket: Long = HotKeyCrossover): Long = {
-    if (hotKeyRows <= 0L || spanSeconds <= 0L) 86400L
-    else {
-      val w = spanSeconds.toDouble * targetRowsPerBucket.toDouble / hotKeyRows.toDouble
-      math.min(spanSeconds, math.max(1L, w.toLong))
-    }
-  }
-
-  /** Burst-resistant [[bucketWidthFor]]: the average-density width is
-    * CORRECTED DOWN by the hot key's measured PEAK window density. A key
-    * whose rows bunch into one hour of a month span has ~700× its
-    * month-average density inside the burst — the average-sized width
-    * then re-serializes exactly where the rows are (the r14 auto-width
-    * failure mode). The peak width `peakWindowSeconds × target / peakRows`
-    * is what the target-rows-per-bucket goal demands AT the burst; taking
-    * the min of the two candidates sizes for the worst window while never
-    * widening past the average-safe bound. Degenerate peak stats (0 — no
-    * timed rows in the probe) keep the average width; everything stays
-    * clamped to [1 s, span] as in the base sizer. Width is purely
-    * physical (all forms row-equivalent), so a mis-measured peak moves
-    * cost, never rows.
-    */
-  def bucketWidthFor(
-      hotKeyRows: Long,
-      spanSeconds: Long,
-      peakWindowRows: Long,
-      peakWindowSeconds: Long,
-      targetRowsPerBucket: Long): Long = {
-    val avg = bucketWidthFor(hotKeyRows, spanSeconds, targetRowsPerBucket)
-    if (peakWindowRows <= 0L || peakWindowSeconds <= 0L) avg
-    else {
-      val wPeak = peakWindowSeconds.toDouble * targetRowsPerBucket.toDouble /
-        peakWindowRows.toDouble
-      math.max(1L, math.min(avg, wPeak.toLong))
-    }
-  }
-
-  /** [[bucketWidthFor]] with a SECOND, finer peak (r16): the hourly peak
-    * misses a sub-hour micro-burst — an open-auction burst packing its
-    * rows into one minute of an otherwise-quiet hour has ~60× its hourly
-    * density inside the burst, and the hour-peak width re-serializes
-    * there exactly as the r14 average width did inside an hour burst.
-    * The candidate set just grows by one: width = min(avg, hour-peak,
-    * fine-peak), each being what the target-rows-per-bucket goal demands
-    * at its own resolution. A zero fine peak (no timed rows, or sampled
-    * evidence below the probe's significance floor) keeps the coarser
-    * answer; clamping as in the base sizer. Purely physical as ever: a
-    * mis-sized width moves cost, never rows.
-    */
-  def bucketWidthFor(
-      hotKeyRows: Long,
-      spanSeconds: Long,
-      peakWindowRows: Long,
-      peakWindowSeconds: Long,
-      peakFineRows: Long,
-      peakFineSeconds: Long,
-      targetRowsPerBucket: Long): Long = {
-    val base = bucketWidthFor(hotKeyRows, spanSeconds, peakWindowRows,
-      peakWindowSeconds, targetRowsPerBucket)
-    if (peakFineRows <= 0L || peakFineSeconds <= 0L) base
-    else {
-      val wFine = peakFineSeconds.toDouble * targetRowsPerBucket.toDouble /
-        peakFineRows.toDouble
-      math.max(1L, math.min(base, wFine.toLong))
-    }
-  }
-
-  /** [[chooseAsofForm]] extended with bucket-width sizing: same two-tier
-    * probe discipline (capped no-shuffle quick reject, then ONE sampled
-    * per-key agg — the span AND peak-window stats ride that same pass, so
-    * the probe-job count is unchanged), but a "bucketed" verdict now
-    * carries a width derived from the hottest key's measured
-    * rows-over-time density, corrected down by its PEAK hourly density
-    * ([[bucketWidthFor]] burst overload) — a month-span key whose rows
-    * bunch into one hour gets an hour-scale width, not a month-average
-    * one, so the skew the form exists to break can't reappear inside the
-    * burst.
+    * total is counted with a per-partition CAP ([[Probes.cappedCount]]):
+    * one narrow job, NO shuffle, and exact for the ≤-threshold test. Only
+    * when the probe saturates does the per-key tier run — ONE aggregation
+    * over a seeded SAMPLE sized to [[Probes.SampleRowsTarget]] rows per
+    * threshold-hot key ([[Probes.hottestKeyBurstStats]]; exact below that
+    * target), whose single pass also yields the hot key's span and its
+    * busiest hour and minute. The decision's shuffle stays negligible next
+    * to the join it fronts at any input size; both forms are exact, so
+    * estimation error near the crossover only flips a choice between two
+    * equal-cost plans.
     */
   def chooseAsofDispatch(
       left: DataFrame,
@@ -377,21 +318,19 @@ object AsofJoin {
       on: Seq[String],
       leftTime: String,
       rightTime: String,
-      threshold: Long = HotKeyCrossover,
-      defaultBucketSeconds: Long = 86400L
+      threshold: Long = HotKeyCrossover
   ): AsofDispatch = {
     val keys = left
       .select((on.map(col) :+ col(leftTime).cast("timestamp").as("__t")): _*)
       .unionByName(right
         .select((on.map(col) :+ col(rightTime).cast("timestamp").as("__t")): _*))
-    if (Probes.cappedCount(keys, threshold) <= threshold)
-      return AsofDispatch("plain", defaultBucketSeconds)
-    val stats = Probes.hottestKeyBurstStats(keys, on, "__t", threshold)
-    if (stats.rows > threshold)
-      AsofDispatch("bucketed", bucketWidthFor(stats.rows, stats.spanSeconds,
-        stats.peakWindowRows, Probes.PeakWindowSeconds,
-        stats.peakFineRows, Probes.FineWindowSeconds, threshold))
-    else AsofDispatch("plain", defaultBucketSeconds)
+    if (Probes.cappedCount(keys, threshold) <= threshold) Plain
+    else {
+      val s = Probes.hottestKeyBurstStats(keys, on, "__t", threshold)
+      dispatchFor(s.rows, s.spanSeconds,
+        Seq(s.peakWindowRows -> Probes.PeakWindowSeconds,
+          s.peakFineRows -> Probes.FineWindowSeconds), threshold)
+    }
   }
 
   /** As-of join that picks the physical form per call: the per-key
@@ -403,12 +342,9 @@ object AsofJoin {
     * serializes in one partition). All forms produce identical rows
     * (equivalence-tested), so the choice is purely physical.
     *
-    * @param mode override knob: "auto" (default) measures and decides —
-    *             including the bucket width, sized from the hottest key's
-    *             measured density ([[chooseAsofDispatch]]); "plain" /
-    *             "bucketed" force the form without the decision scan (for
-    *             callers that already know their shape), taking
-    *             `bucketSeconds` as given.
+    * @param dispatch a verdict the caller already holds (e.g. from stored
+    *                 metadata) skips the decision scan; `None` measures the
+    *                 frames ([[chooseAsofDispatch]])
     */
   def leftAsofAuto(
       left: DataFrame,
@@ -418,23 +354,13 @@ object AsofJoin {
       rightTime: String,
       rightPayload: Seq[String],
       suffix: String = "",
-      mode: String = "auto",
-      hotKeyThreshold: Long = HotKeyCrossover,
-      bucketSeconds: Long = 86400L
-  ): DataFrame = {
-    val dispatch = mode match {
-      case "auto" =>
-        chooseAsofDispatch(left, right, on, leftTime, rightTime,
-          hotKeyThreshold, bucketSeconds)
-      case "plain" | "bucketed" => AsofDispatch(mode, bucketSeconds)
-      case other =>
-        throw new IllegalArgumentException(
-          s"mode must be auto|plain|bucketed, got $other")
+      dispatch: Option[AsofDispatch] = None
+  ): DataFrame =
+    dispatch.getOrElse(chooseAsofDispatch(left, right, on, leftTime, rightTime)) match {
+      case Bucketed(width) =>
+        leftAsofBucketed(left, right, on, leftTime, rightTime, rightPayload,
+          suffix, width)
+      case Plain =>
+        leftAsofNative(left, right, on, leftTime, rightTime, rightPayload, suffix)
     }
-    if (dispatch.form == "bucketed")
-      leftAsofBucketed(left, right, on, leftTime, rightTime, rightPayload,
-        suffix, dispatch.bucketSeconds)
-    else
-      leftAsofNative(left, right, on, leftTime, rightTime, rightPayload, suffix)
-  }
 }

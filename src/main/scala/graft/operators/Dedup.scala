@@ -1,12 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators.
   *
-  * [[replacingDedup]] reproduces the reference's ReplacingMergeTree
+  * [[replacingDedupAgg]] reproduces the reference's ReplacingMergeTree
   * semantics (`clickhouse_manager.py:159-161`: dedup key
   * `(instrument, timestamp)`, merge-time row replacement) — but strictly, at
   * write/query time, instead of eventually at background-merge time
@@ -15,31 +14,19 @@ import org.apache.spark.sql.functions._
   * [[exactText]] is the exact-duplicate detector of the LLM-pipeline
   * extension surface: hash-groupBy on a content digest.
   *
-  * Scale: both are single-shuffle hash aggregations/windows on the dedup
-  * key; partial aggregation (for exactText) and AQE skew handling apply.
-  * No driver-side state.
+  * Scale: both are single-shuffle hash aggregations on the dedup key;
+  * partial aggregation and AQE skew handling apply. No driver-side state.
   */
 object Dedup {
 
   /** Keep exactly one row per key group, the winner being the row with the
-    * minimal `order` tuple (deterministic — important for oracle parity).
-    */
-  def replacingDedup(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** [[replacingDedup]] as a hash AGGREGATION instead of a sort-window:
-    * `min_by(struct(row), struct(order))` keeps the winning row per key
-    * with map-side partial aggregation and no sort at all. Identical
-    * result for ascending `order` columns with unique tuples — but at
-    * scale the shuffle carries one pre-combined row per (key, map task)
-    * rather than every input row through a full sort (the 100×-data probe
-    * measured 48× window-form cost vs ~6× for aggregation-shaped
-    * operators; this closes that gap). Prefer this form; the window form
-    * remains for order specs that aren't plain ascending columns.
+    * minimal ascending `order` tuple (deterministic when those tuples are
+    * unique — important for oracle parity), as a hash AGGREGATION: `min_by(struct(row), struct(order))` keeps the
+    * winning row per key with map-side partial aggregation and no sort at
+    * all, so at scale the shuffle carries one pre-combined row per (key,
+    * map task) rather than every input row through a full sort (the
+    * 100×-data probe measured 48× cost for the row_number-window form vs
+    * ~6× for aggregation-shaped operators, SCALE.md).
     */
   def replacingDedupAgg(df: DataFrame, keys: Seq[String], order: Seq[String]): DataFrame = {
     val rowStruct = struct(df.columns.map(col).toIndexedSeq: _*)

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * table back onto the pair frame.
   *
   * @param baskets (basketCol, itemCol) rows; duplicates of an item
-  *                within a basket collapse
+  *                within a basket collapse; rows with a NULL basket id
+  *                count toward single-item support only
   * @return (item_a, item_b, n_pair, lift_e6), item_a < item_b, pair
   *         support ≥ minSupport
   */
@@ -43,14 +44,17 @@ object Itemsets {
       .agg(array_sort(collect_set(col("it"))).as("its"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // basket total rides the plan as a 1-row broadcast scalar instead of a
-    // separate driver-side count job (one fewer pass over the basket frame)
-    val nBaskets = b.agg(count(lit(1)).as("__nbk"))
+    // separate driver-side count job (one fewer pass over the basket frame).
+    // A NULL basket id is not a basket (SQL `count(DISTINCT bk)` skips it
+    // and `a.bk = c.bk` never matches it): its rows count toward single-item
+    // support only, neither toward the basket total nor as pairs.
+    val nBaskets = b.agg(count(col("bk")).as("__nbk"))
     val singles = b.select(explode(col("its")).as("it"))
       .groupBy(col("it")).agg(count(lit(1)).as("n_single"))
     // per-basket pair explosion (not a basket self-join): an in-row
     // (x, later-y) expansion over the sorted set — identical pair multiset
     // to join-on-bk + a<b, one exchange fewer
-    val pairs = b
+    val pairs = b.filter(col("bk").isNotNull)
       .select(explode(expr(
         """flatten(transform(its, (x, i) ->
              transform(slice(its, i + 2, size(its)), y ->

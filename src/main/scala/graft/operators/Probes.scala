@@ -195,20 +195,6 @@ object Probes {
     HotKeyStats(scaled(n), span, scaled(peak), fine)
   }
 
-  /** Back-compat view of [[hottestKeyBurstStats]]: (rows, spanSeconds) of
-    * the hottest key. Same single probe job.
-    */
-  def hottestKeyStats(
-      df: DataFrame,
-      keyCols: Seq[String],
-      timeCol: String,
-      threshold: Long,
-      seed: Long = 42L
-  ): (Long, Long) = {
-    val s = hottestKeyBurstStats(df, keyCols, timeCol, threshold, seed)
-    (s.rows, s.spanSeconds)
-  }
-
   /** Longest [start, end) interval in `df`, in whole seconds (ceil) — the
     * bucket-width probe for [[IntervalJoin.overlapJoinAuto]]. One narrow
     * max-aggregation over a derived column: no shuffle beyond the final

@@ -123,7 +123,7 @@ object StreamingOhlc {
 
   /** Streaming dedup: drop rows whose `keys` already appeared within the
     * watermark horizon — the streaming twin of the batch
-    * `Dedup.replacingDedup` (the reference's ReplacingMergeTree semantics
+    * `Dedup.replacingDedupAgg` (the reference's ReplacingMergeTree semantics
     * applied at ingest time instead of merge time). State holds one entry
     * per distinct key seen inside the watermark and is evicted as event
     * time advances, so state size is bounded by the dup horizon, not the

@@ -775,8 +775,4 @@ object MinHash {
     */
   def simhashPoly(text: Column, bits: Int = 30): Column =
     graft.functions.exprs.simhashPoly(text, bits)
-
-  /** Hamming distance between two simhash fingerprints. */
-  def hammingDist(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 }

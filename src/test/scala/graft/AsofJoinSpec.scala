@@ -123,59 +123,59 @@ class AsofJoinSpec extends SparkSpec {
       (if (i % 2 == 0) "A" else "B", randTs(), i)).toDF("k", "t", "id")
     val right = (1 to 300).map(i =>
       (if (i % 3 == 0) "A" else "B", randTs(), i * 1.0)).toDF("k", "t", "v")
-    assert(AsofJoin.chooseAsofForm(left, right, Seq("k")) === "plain")
+    def form(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame,
+        threshold: Long = AsofJoin.HotKeyCrossover) =
+      AsofJoin.chooseAsofDispatch(l, r, Seq("k"), "t", "t", threshold)
+    assert(form(left, right) === AsofJoin.Plain)
     // skewed shape: one key carries everything — with the threshold scaled
     // down to test size, the dispatcher must flip to bucketed
     val hotL = (1 to 400).map(i => ("HOT", randTs(), i)).toDF("k", "t", "id")
     val hotR = (1 to 300).map(i => ("HOT", randTs(), i * 1.0)).toDF("k", "t", "v")
-    assert(AsofJoin.chooseAsofForm(hotL, hotR, Seq("k"), threshold = 500L)
-      === "bucketed")
-    assert(AsofJoin.chooseAsofForm(hotL, hotR, Seq("k")) === "plain") // default 1M
+    val hot = form(hotL, hotR, threshold = 500L)
+    assert(hot.isInstanceOf[AsofJoin.Bucketed])
+    assert(form(hotL, hotR) === AsofJoin.Plain) // default 1M
     // both dispatch targets produce identical rows on both shapes
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "t", "id", "v_r").orderBy("k", "t", "id")
         .collect().map(_.toString).toSeq
     assert(
       canon(AsofJoin.leftAsofAuto(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r",
-        hotKeyThreshold = 500L)) ===
+        dispatch = Some(hot))) ===
       canon(AsofJoin.leftAsof(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r")))
     assert(
       canon(AsofJoin.leftAsofAuto(left, right, Seq("k"), "t", "t", Seq("v"), "_r")) ===
       canon(AsofJoin.leftAsof(left, right, Seq("k"), "t", "t", Seq("v"), "_r")))
-    // override knob bypasses the decision scan
+    // a verdict in hand bypasses the decision scan
+    val before = graft.operators.Probes.probeJobs.get()
     assert(
       canon(AsofJoin.leftAsofAuto(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r",
-        mode = "bucketed")) ===
+        dispatch = Some(AsofJoin.Bucketed(86400L)))) ===
       canon(AsofJoin.leftAsof(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r")))
-    intercept[IllegalArgumentException] {
-      AsofJoin.leftAsofAuto(left, right, Seq("k"), "t", "t", Seq("v"), "_r",
-        mode = "nope")
-    }
+    assert(graft.operators.Probes.probeJobs.get() === before)
     // empty right side must not NPE the decision (max(count) over no rows)
     val emptyR = right.filter(col("v") < 0)
-    assert(AsofJoin.chooseAsofForm(left.limit(0), emptyR, Seq("k")) === "plain")
+    assert(form(left.limit(0), emptyR) === AsofJoin.Plain)
     // two-tier boundary: 700 total rows saturate the capped-count quick
     // reject at threshold 600, but the hottest key (~380 rows) is still
     // under it — the per-key agg tier must run and still answer "plain"
-    assert(AsofJoin.chooseAsofForm(left, right, Seq("k"), threshold = 600L)
-      === "plain")
+    assert(form(left, right, threshold = 600L) === AsofJoin.Plain)
   }
 
   test("auto-sized bucket width: span × target / hotRows, clamped; dispatch carries it") {
     import AsofJoin.bucketWidthFor
     // 100M rows over one day targeting 1M/bucket → ~864 s buckets
-    assert(bucketWidthFor(100000000L, 86400L, 1000000L) === 864L)
+    assert(bucketWidthFor(100000000L, 86400L, Nil, 1000000L) === 864L)
     // density ×10 → width ÷10: rows-per-bucket stays at the target, which
     // is what keeps the hot-key wall flat as density scales (the fixed
     // day-wide bucket would hold 10× the rows and re-serialize)
-    assert(bucketWidthFor(1000000000L, 86400L, 1000000L) === 86L)
+    assert(bucketWidthFor(1000000000L, 86400L, Nil, 1000000L) === 86L)
     // clamps: never wider than the span, never below 1 s
-    assert(bucketWidthFor(2000000L, 86400L, 1000000L) === 43200L)
-    assert(bucketWidthFor(500000L, 86400L, 1000000L) === 86400L) // w > span
-    assert(bucketWidthFor(10000000L, 5L, 1000000L) === 1L)
+    assert(bucketWidthFor(2000000L, 86400L, Nil, 1000000L) === 43200L)
+    assert(bucketWidthFor(500000L, 86400L, Nil, 1000000L) === 86400L) // w > span
+    assert(bucketWidthFor(10000000L, 5L, Nil, 1000000L) === 1L)
     // degenerate stats (no rows / zero span) fall back to the day default
-    assert(bucketWidthFor(0L, 86400L) === 86400L)
-    assert(bucketWidthFor(5000000L, 0L) === 86400L)
+    assert(bucketWidthFor(0L, 86400L, Nil) === 86400L)
+    assert(bucketWidthFor(5000000L, 0L, Nil) === 86400L)
 
     val rnd = new scala.util.Random(11)
     val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
@@ -186,7 +186,7 @@ class AsofJoinSpec extends SparkSpec {
     // width is exactly span × threshold / rows of the combined hot key
     val d = AsofJoin.chooseAsofDispatch(hotL, hotR, Seq("k"), "t", "t",
       threshold = 500L)
-    assert(d.form === "bucketed")
+    val AsofJoin.Bucketed(width) = d
     val union = hotL.select(col("t")).unionByName(hotR.select(col("t")))
     val mm = union.agg(
       org.apache.spark.sql.functions.min("t"),
@@ -198,29 +198,58 @@ class AsofJoinSpec extends SparkSpec {
     val peak = union
       .groupBy(org.apache.spark.sql.functions.window(col("t"), "1 hour"))
       .count().agg(org.apache.spark.sql.functions.max("count")).head().getLong(0)
-    assert(d.bucketSeconds === bucketWidthFor(700L, span, peak,
-      graft.operators.Probes.PeakWindowSeconds, 500L))
-    assert(d.bucketSeconds > 0L && d.bucketSeconds < 86400L * 10)
-    // even shape: plain verdict keeps the caller's default width
+    assert(width === bucketWidthFor(700L, span,
+      Seq(peak -> graft.operators.Probes.PeakWindowSeconds), 500L))
+    assert(width > 0L && width < 86400L * 10)
+    // even shape: a plain verdict carries no width
     val evenL = (1 to 60).map(i => (s"k${i % 6}", randTs(), i)).toDF("k", "t", "id")
     val evenR = (1 to 60).map(i => (s"k${i % 6}", randTs(), i * 1.0)).toDF("k", "t", "v")
     val dp = AsofJoin.chooseAsofDispatch(evenL, evenR, Seq("k"), "t", "t",
-      threshold = 500L, defaultBucketSeconds = 1234L)
-    assert(dp === AsofJoin.AsofDispatch("plain", 1234L))
+      threshold = 500L)
+    assert(dp === AsofJoin.Plain)
     // equivalence holds at arbitrary odd widths — the width is purely
     // physical, so auto picking ANY width can never change rows
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "t", "id", "v_r").orderBy("k", "t", "id")
         .collect().map(_.toString).toSeq
     val expected = canon(AsofJoin.leftAsof(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r"))
-    for (w <- Seq(37L, 3600L, d.bucketSeconds))
+    for (w <- Seq(37L, 3600L, width))
       assert(canon(AsofJoin.leftAsofBucketed(hotL, hotR, Seq("k"), "t", "t",
         Seq("v"), "_r", bucketSeconds = w)) === expected)
     assert(canon(AsofJoin.leftAsofAuto(hotL, hotR, Seq("k"), "t", "t",
-      Seq("v"), "_r", hotKeyThreshold = 500L)) === expected)
+      Seq("v"), "_r", dispatch = Some(d))) === expected)
   }
 
-  test("hottestKeyStats sampled tier: count within a few percent, span near-true") {
+  test("dispatchFor: one decision for footer month windows and probe peak windows") {
+    import AsofJoin.{Bucketed, Plain, bucketWidthFor, dispatchFor}
+    val (jan, feb) = (31L * 86400L, 29L * 86400L) // 2024: leap February
+    // footer-shaped stats (OhlcGenerator.regenerate): the stored total, the
+    // span of the live months, one window per month. A year of sparse
+    // history with one packed month gets a width sized for that month
+    val year = 366L * 86400L
+    val sparse = Seq.fill(11)(40000L -> jan)
+    assert(dispatchFor(2940000L, year, (2500000L -> jan) +: sparse) ===
+      Bucketed(jan * 1000000L / 2500000L))
+    // two half-full months: every candidate is wider than a month. The
+    // width is the densest demand (Feb: 29 d × 1M / 600k = 4 176 000 s);
+    // a month window is a density demand, not a cap at its own length
+    assert(dispatchFor(1200000L, jan + feb, Seq(600000L -> jan, 600000L -> feb))
+      === Bucketed(4176000L))
+    // at or under the threshold: plain, whatever the windows say
+    assert(dispatchFor(1000000L, jan, Seq(1000000L -> 60L)) === Plain)
+    // probe-shaped stats (chooseAsofDispatch): span plus hour and minute
+    // peaks, with the threshold as the per-bucket target
+    val span = 30L * 86400L
+    val probe = Seq(1200000L -> 3600L, 900000L -> 60L)
+    assert(dispatchFor(10000000L, span, probe, 500000L) ===
+      Bucketed(bucketWidthFor(10000000L, span, probe, 500000L)))
+    assert(dispatchFor(10000000L, span, probe, 500000L) === Bucketed(33L))
+    // a probe that saw no timed rows: zero windows are ignored
+    assert(dispatchFor(10000000L, span, Seq(0L -> 3600L, 0L -> 60L)) ===
+      Bucketed(span / 10L))
+  }
+
+  test("hottestKeyBurstStats sampled tier: count within a few percent, span near-true") {
     import graft.operators.Probes
     // threshold 20000 > SampleRowsTarget(10000) → frac = 0.5 (sampled path);
     // 60k rows on one hot key, 6k on a cold one, spread over a known span
@@ -232,8 +261,8 @@ class AsofJoinSpec extends SparkSpec {
     val cold = spark.range(6000L).selectExpr("'COLD' AS k",
       "timestamp_seconds(1704067200 + id % 86400) AS t")
     val df = hot.unionByName(cold)
-    val (rows, span) = Probes.hottestKeyStats(df, Seq("k"), "t",
-      threshold = 20000L)
+    val Probes.HotKeyStats(rows, span, _, _) = Probes.hottestKeyBurstStats(
+      df, Seq("k"), "t", threshold = 20000L)
     // binomial CLT at ~30k sampled rows: well inside ±5%
     assert(math.abs(rows - n) <= n / 20,
       s"sampled hottest-key estimate $rows too far from $n")
@@ -242,12 +271,13 @@ class AsofJoinSpec extends SparkSpec {
     assert(span <= trueSpan + 1 && span >= (trueSpan * 0.95).toLong,
       s"sampled span $span too far from $trueSpan")
     // exact tier below the sampling threshold: exact count AND exact span
-    val (re, se) = Probes.hottestKeyStats(df, Seq("k"), "t", threshold = 100L)
+    val Probes.HotKeyStats(re, se, _, _) =
+      Probes.hottestKeyBurstStats(df, Seq("k"), "t", threshold = 100L)
     assert(re === n)
     assert(se === trueSpan)
-    // empty input: no NPE, (0, 0)
-    assert(Probes.hottestKeyStats(df.filter("1 = 0"), Seq("k"), "t", 100L)
-      === ((0L, 0L)))
+    // empty input: no NPE, all zero
+    assert(Probes.hottestKeyBurstStats(df.filter("1 = 0"), Seq("k"), "t", 100L)
+      === Probes.HotKeyStats(0L, 0L, 0L))
   }
 
   test("hottestKeyBurstStats: peak hourly density rides the same single probe pass") {
@@ -289,21 +319,21 @@ class AsofJoinSpec extends SparkSpec {
     // peak sees the real density and demands 60 × 1M / 1M = 60 s
     val hourAvg = 10000000L / (span / 3600L)
     val burstHour = 1000000L + hourAvg
-    val w2 = bucketWidthFor(10000000L, span, burstHour, 3600L, 1000000L)
-    val w3 = bucketWidthFor(10000000L, span, burstHour, 3600L,
-      1000000L, 60L, 1000000L)
+    val w2 = bucketWidthFor(10000000L, span, Seq(burstHour -> 3600L), 1000000L)
+    val w3 = bucketWidthFor(10000000L, span,
+      Seq(burstHour -> 3600L, 1000000L -> 60L), 1000000L)
     assert(w3 === math.min(w2, 60L) && w3 < w2,
       s"minute peak must shrink the width: hour-only $w2, with-fine $w3")
     // degenerate fine stats keep the coarser answer
-    assert(bucketWidthFor(10000000L, span, burstHour, 3600L, 0L, 60L, 1000000L)
-      === w2)
-    assert(bucketWidthFor(10000000L, span, burstHour, 3600L, 1000000L, 0L,
-      1000000L) === w2)
+    assert(bucketWidthFor(10000000L, span,
+      Seq(burstHour -> 3600L, 0L -> 60L), 1000000L) === w2)
+    assert(bucketWidthFor(10000000L, span,
+      Seq(burstHour -> 3600L, 1000000L -> 0L), 1000000L) === w2)
     // uniform traffic: the fine correction is a no-op (fine width ≥ hour's)
     val finePeakUniform = 10000000L / (span / 60L)
-    assert(bucketWidthFor(10000000L, span, hourAvg, 3600L,
-      finePeakUniform, 60L, 1000000L)
-      === bucketWidthFor(10000000L, span, hourAvg, 3600L, 1000000L))
+    assert(bucketWidthFor(10000000L, span,
+      Seq(hourAvg -> 3600L, finePeakUniform -> 60L), 1000000L)
+      === bucketWidthFor(10000000L, span, Seq(hourAvg -> 3600L), 1000000L))
     // probe significance floor: a sampled fine peak below MinFineSampleRows
     // reads 0 from the probe, so sizing provably keeps the coarser answer
     val tiny = spark.range(10L).selectExpr("'HOT' AS k",
@@ -323,19 +353,19 @@ class AsofJoinSpec extends SparkSpec {
     // peak correction sizes from the burst's own density instead
     // (3600 × 1M / 10M = 360 s → ~10 buckets across the burst) and takes
     // the MIN of the two candidates.
-    val avgOnly = bucketWidthFor(10000000L, span, 1000000L)
-    val burstAware = bucketWidthFor(10000000L, span, 10000000L, 3600L, 1000000L)
+    val avgOnly = bucketWidthFor(10000000L, span, Nil, 1000000L)
+    val burstAware = bucketWidthFor(10000000L, span, Seq(10000000L -> 3600L), 1000000L)
     assert(burstAware <= avgOnly)
     assert(burstAware === math.min(avgOnly, 360L))
     // uniform key (peak ≈ rows/hours): correction is a no-op (peak width ≥ avg)
     val hours = span / 3600L
     val uniformPeak = 10000000L / hours
-    assert(bucketWidthFor(10000000L, span, uniformPeak, 3600L, 1000000L)
+    assert(bucketWidthFor(10000000L, span, Seq(uniformPeak -> 3600L), 1000000L)
       === avgOnly)
     // degenerate peak stats keep the average width; floor at 1 s holds
-    assert(bucketWidthFor(10000000L, span, 0L, 3600L, 1000000L) === avgOnly)
-    assert(bucketWidthFor(10000000L, span, 10000000L, 0L, 1000000L) === avgOnly)
-    assert(bucketWidthFor(10000000L, span, Long.MaxValue / 2, 3600L, 1L) === 1L)
+    assert(bucketWidthFor(10000000L, span, Seq(0L -> 3600L), 1000000L) === avgOnly)
+    assert(bucketWidthFor(10000000L, span, Seq(10000000L -> 0L), 1000000L) === avgOnly)
+    assert(bucketWidthFor(10000000L, span, Seq((Long.MaxValue / 2) -> 3600L), 1L) === 1L)
   }
 
   test("native as-of rejects an empty key list with a clear message") {

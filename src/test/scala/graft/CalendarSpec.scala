@@ -91,4 +91,25 @@ class CalendarSpec extends SparkSpec {
       LocalDate.of(2024, 11, 28), LocalDate.of(2024, 11, 28))
     assert(thanksgiving.isEmpty)
   }
+
+  test("exchange_sessions lookup table: one row per registry exchange, 10 typed columns") {
+    import org.apache.spark.sql.types._
+    val df = TradingCalendar.exchangeSessionsDf(spark)
+    assert(df.schema.map(f => f.name -> f.dataType) === Seq(
+      "exchange" -> StringType, "mic" -> StringType, "name" -> StringType,
+      "currency" -> StringType, "timezone" -> StringType,
+      "country" -> StringType, "open_hour" -> IntegerType,
+      "open_minute" -> IntegerType, "close_hour" -> IntegerType,
+      "close_minute" -> IntegerType))
+    val rows = df.collect().map(r => r.getString(0) -> r).toMap
+    assert(rows.size === ExchangeRegistry.all.size)
+    ExchangeRegistry.all.foreach { e =>
+      val r = rows(e.key)
+      assert(r.toSeq === Seq(e.key, e.mic, e.name, e.currency, e.timezone,
+        e.country, e.openHour, e.openMinute, e.closeHour, e.closeMinute))
+    }
+    // spot-check against the reference registry (exchanges.py)
+    assert(rows("lse").getString(1) === "XLON")
+    assert(rows("xtks").getInt(8) === 15)
+  }
 }

@@ -723,21 +723,22 @@ class ForexPipelineSpec extends SparkSpec {
 
     // a full regeneration batch launches NO decision probe — the verdict
     // is read off footer metadata (Ohlc.ticksToOhlc1m would pay one per
-    // call in auto mode)
+    // call without a verdict)
     val before = graft.operators.Probes.probeJobs.get()
     val bars = graft.ohlc.OhlcGenerator.regenerate(spark, wh, "eurusd")
     assert(graft.operators.Probes.probeJobs.get() === before,
       "regenerate launched a probe job despite footer-derived dispatch")
     assert(bars > 0)
 
-    // the explicit-mode plan is the same frame auto mode produces (the
-    // dispatch is purely physical), and auto mode DOES pay a probe
+    // an explicit verdict plans the same frame the probed dispatch
+    // produces (the dispatch is purely physical), and probing DOES pay
     val raw = TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD"))
     val std = TickIngest.readTicks(spark, wh, "standard", Some("EURUSD"))
     val auto = graft.ohlc.OhlcGenerator.generate(raw, std).collect()
     assert(graft.operators.Probes.probeJobs.get() > before,
-      "auto-mode generate should have paid a decision probe")
-    val explicit = graft.ohlc.OhlcGenerator.generate(raw, std, "plain").collect()
+      "probed generate should have paid a decision probe")
+    val explicit = graft.ohlc.OhlcGenerator
+      .generate(raw, std, Some(graft.operators.AsofJoin.Plain)).collect()
     assert(explicit.map(_.toString).sorted.sameElements(auto.map(_.toString).sorted))
   }
 

@@ -64,4 +64,24 @@ class StatsSpec extends SparkSpec {
     // (20,30) co-occur whenever 30 appears: lift 1·3e6/(2·1) = 1.5e6
     assert(all.contains((20L, 30L, 1L, 1500000L)), all.toString)
   }
+
+  test("pair lift: a NULL basket id counts toward single support only") {
+    // the q_itemset_lift oracle: count(DISTINCT bk) skips the NULL basket
+    // and `a.bk = c.bk` never matches it, but its DISTINCT (bk, it) rows
+    // still count in the per-item support `s`
+    val b = Seq[(Option[Long], Long)](
+      (Some(1L), 10L), (Some(1L), 20L),
+      (Some(2L), 10L), (Some(2L), 20L),
+      (Some(3L), 10L), (Some(3L), 30L),
+      (None, 10L), (None, 20L), (None, 30L), (None, 10L)
+    ).toDF("bk", "it")
+    val got = Itemsets.pairLift(b, "bk", "it", minSupport = 1)
+      .orderBy("item_a", "item_b")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    // nb = 3 baskets; supports 10 -> 4, 20 -> 3, 30 -> 2 (NULL basket
+    // included); pairs from baskets 1-3 only:
+    //   (10,20): n_pair 2, lift 2·3·1e6 div (4·3) = 500000
+    //   (10,30): n_pair 1, lift 1·3·1e6 div (4·2) = 375000
+    assert(got == Seq((10L, 20L, 2L, 500000L), (10L, 30L, 1L, 375000L)))
+  }
 }
